@@ -280,11 +280,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("value_trailing_count").alias("trail_cnt"),
         )
 
-    # scalable (two-phase chunked, skew-proof) window variants — same
-    # semantics as the plain versions, so they share the DuckDB oracles
+    # scalable (two-phase chunked, skew-proof) window bundle, one
+    # feature at a time — same semantics as the plain versions, so they
+    # share the DuckDB oracles
     def q_sessionize_scalable(spark, sf_dir):
         ev = _events(spark, sf_dir).select("event_id", "user_id", "ts")
-        return temporal.with_session_id_scalable(
+        return temporal.with_temporal_bundle_scalable(
             ev, ts="ts", partition_by="user_id", gap_seconds=1800,
             order_tiebreak=["event_id"], chunk_seconds=3600.0,
         ).select("event_id", "user_id", "session_seq")
@@ -293,17 +294,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ev = _events(spark, sf_dir).withColumn(
             "v", F.when(F.col("event_type") == "click", F.col("value"))
         )
-        return temporal.with_ffill_scalable(
+        return temporal.with_temporal_bundle_scalable(
             ev.select("event_id", "user_id", "ts", "v"),
-            ["v"], ts="ts", partition_by="user_id",
+            ts="ts", partition_by="user_id", ffill_cols=["v"],
             order_tiebreak=["event_id"], chunk_seconds=3600.0,
         ).select("event_id", "user_id", "v", "v_ffill")
 
     def q_lag_lead_scalable(spark, sf_dir):
         ev = _events(spark, sf_dir)
-        return temporal.with_lag_lead_scalable(
+        return temporal.with_temporal_bundle_scalable(
             ev.select("event_id", "user_id", "ts", "value"),
-            ["value"], ts="ts", partition_by="user_id",
+            ts="ts", partition_by="user_id", lag_cols=["value"],
             order_tiebreak=["event_id"], chunk_seconds=3600.0,
         ).select("event_id", "user_id", "value_lag1", "value_lead1")
 
@@ -6177,9 +6178,11 @@ def oracle_sql() -> dict[str, str]:
         """,
         "psi_drift": """
             WITH ref AS (SELECT CAST(n_chars AS DOUBLE) AS s
-                         FROM documents WHERE lang = 'en'),
+                         FROM documents
+                         WHERE lang = 'en' AND n_chars IS NOT NULL),
             nw AS (SELECT CAST(n_chars AS DOUBLE) AS s
-                   FROM documents WHERE lang <> 'en'),
+                   FROM documents
+                   WHERE lang <> 'en' AND n_chars IS NOT NULL),
             b AS (SELECT min(s) AS lo, max(s) AS hi FROM ref),
             pb AS (
                 SELECT CAST(least(greatest(floor((s - b.lo) * 10.0

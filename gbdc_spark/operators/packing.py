@@ -118,7 +118,7 @@ def pack_next_fit_scalable(
     persist: bool = True,
 ) -> DataFrame:
     """``pack_next_fit`` without the whole-group pandas frame — the
-    two-phase chunked shape of ``temporal.with_session_id_scalable``,
+    two-phase chunked shape of ``temporal.with_temporal_bundle_scalable``,
     bit-identical output (tested property).
 
     ``pack_next_fit`` materializes each ``by`` group in ONE task; with

@@ -2443,7 +2443,8 @@ def psi_bins(df: DataFrame, score_col: str, lo: float, hi: float,
     Counts are additive across ANY row split, so this runs UNCHANGED
     as a Structured Streaming aggregate (the CMS/HLL merge-property
     pattern): stream the new population's scores, sink the bin table,
-    and assemble PSI batch-side with :func:`psi_from_bins`."""
+    and assemble PSI batch-side with :func:`psi_from_bins`.  NULL scores
+    fall in no bin (as in :func:`ks_statistic`)."""
     b = F.least(
         F.greatest(
             F.floor(
@@ -2455,7 +2456,8 @@ def psi_bins(df: DataFrame, score_col: str, lo: float, hi: float,
         F.lit(int(bins) - 1).cast("long"),
     )
     return (
-        df.select(b.alias("bin")).groupBy("bin")
+        df.filter(F.col(score_col).isNotNull())
+        .select(b.alias("bin")).groupBy("bin")
         .agg(F.count("*").alias("n"))
     )
 

@@ -24,14 +24,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions import persist_slot
+
 __all__ = [
     "asof_join",
     "with_lag_lead",
     "with_ffill",
-    "with_ffill_scalable",
-    "with_lag_lead_scalable",
     "with_session_id",
-    "with_session_id_scalable",
     "with_temporal_bundle_scalable",
     "with_trailing_agg",
     "time_resample",
@@ -65,6 +64,11 @@ def _auto_buckets(left: DataFrame, right: DataFrame, default: int,
     return default
 
 
+# per-bucket input size _auto_buckets aims at when asof_join is not given
+# an explicit bucket count
+_TARGET_BUCKET_BYTES = 64 << 20
+
+
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -75,8 +79,6 @@ def asof_join(
     buckets: int | None = None,
     tolerance: pd.Timedelta | None = None,
     right_tiebreak: list[str] | None = None,
-    narrow_key: list[str] | None = None,
-    target_bucket_bytes: int = 64 << 20,
     direction: str = "backward",
 ) -> DataFrame:
     """Left as-of join: each left row gets the latest right row with
@@ -101,36 +103,14 @@ def asof_join(
 
     Right-side columns other than (by, right_ts) are carried over and must
     not collide with left column names.
-
-    ``narrow_key``: columns that uniquely key the left rows.  When set,
-    only (by, left_ts, narrow_key) cross the Arrow boundary into the
-    cogrouped merge; the wide payload is re-attached with an equi-join.
-    Trade-off, measured on the flagship: the cogroup shuffles the wide
-    table exactly once either way, so narrowing ADDS a sort+join of the
-    wide side — it only pays off when the Python-side cost (payload much
-    wider than here, or pandas memory pressure) dominates the extra JVM
-    join.  The flagship therefore uses the wide path; the option exists
-    for payload-heavy schemas.
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(
             "direction must be 'backward', 'forward' or 'nearest'"
         )
-    if narrow_key:
-        slim_cols = list(dict.fromkeys([by, left_ts, *narrow_key]))
-        core = asof_join(
-            left.select(*slim_cols), right, by=by, left_ts=left_ts,
-            right_ts=right_ts, allow_exact_matches=allow_exact_matches,
-            buckets=buckets, tolerance=tolerance, right_tiebreak=right_tiebreak,
-            direction=direction,
-        )
-        attach_cols = list(dict.fromkeys(narrow_key)) + [
-            f.name for f in right.schema.fields if f.name != by
-        ]
-        return left.join(core.select(*attach_cols), on=list(narrow_key), how="left")
     if buckets is None:
         default = int(left.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-        buckets = _auto_buckets(left, right, default, target_bucket_bytes)
+        buckets = _auto_buckets(left, right, default, _TARGET_BUCKET_BYTES)
     lb = left.withColumn("_b", F.pmod(F.xxhash64(F.col(by)), F.lit(buckets)))
     # When left and right derive from the same scan (self-as-of-join), the
     # by-column is the SAME Catalyst attribute on both sides and the
@@ -178,6 +158,11 @@ def asof_join(
         return merged[left_names + right_cols]
 
     return lb.groupBy("_b").cogroup(rb.groupBy("_b")).applyInPandas(merge, schema=out_schema)
+
+
+def _epoch_us(c: Column) -> Column:
+    # cast handles TIMESTAMP_NTZ parquet columns (session TZ is UTC)
+    return F.unix_micros(c.cast("timestamp"))
 
 
 def with_lag_lead(
@@ -233,212 +218,14 @@ def with_session_id(
     w = Window.partitionBy(*pb).orderBy(*ob)
     prev = F.lag(F.col(ts)).over(w)
     gap_us = int(gap_seconds * 1_000_000)
-    # cast handles TIMESTAMP_NTZ parquet columns (session TZ is UTC)
-    epoch = lambda c: F.unix_micros(c.cast("timestamp"))  # noqa: E731
     new_flag = F.when(
-        prev.isNull() | ((epoch(F.col(ts)) - epoch(prev)) > F.lit(gap_us)),
+        prev.isNull() | ((_epoch_us(F.col(ts)) - _epoch_us(prev)) > F.lit(gap_us)),
         1,
     ).otherwise(0)
     running = Window.partitionBy(*pb).orderBy(*ob).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     return df.withColumn(out, F.sum(new_flag).over(running))
-
-
-def _epoch_us(c: Column) -> Column:
-    return F.unix_micros(c.cast("timestamp"))
-
-
-def with_session_id_scalable(
-    df: DataFrame,
-    ts: str = "ingest_ts",
-    partition_by: str | list[str] = "source",
-    gap_seconds: float = 1800.0,
-    order_tiebreak: list[str] | None = None,
-    out: str = "session_seq",
-    chunk_seconds: float = 86400.0,
-    persist: bool = True,
-) -> DataFrame:
-    """Skew-proof gap sessionization (north_rule: explicit skew handling
-    for heavy sources) — two-phase chunked algorithm.
-
-    A plain ``Window.partitionBy(source)`` serializes each key into one
-    task, so one Zipf-heavy source bounds the whole stage's wall-clock.
-    Here:
-
-    1. rows are split into fixed time chunks (``floor(ts / chunk)``) —
-       a heavy key's stream spreads over many (key, chunk) tasks;
-    2. local sessionization runs per (key, chunk) — the usual
-       flag + running-sum pair of windows;
-    3. a tiny per-(key, chunk) summary (first/last ts, #sessions) is
-       reconciled with one lightweight window over chunk sequence:
-       ``offset(c) = Σ_{c'<c} n_sessions(c') − Σ_{c'≤c} merge(c')`` where
-       ``merge(c)=1`` iff chunk c's first event continues the previous
-       chunk's last session (gap ≤ threshold);
-    4. offsets broadcast-join back; global id = local id + offset.
-
-    Output is identical to ``with_session_id`` for any chunk width (tested
-    property); wall-clock is bounded by the heaviest (key, chunk), not the
-    heaviest key.
-    """
-    pb = [partition_by] if isinstance(partition_by, str) else partition_by
-    ob: list[Column | str] = [ts] + (order_tiebreak or [])
-    gap_us = int(gap_seconds * 1_000_000)
-    chunk_us = int(chunk_seconds * 1_000_000)
-
-    d = df.withColumn("_chunk", F.floor(_epoch_us(F.col(ts)) / F.lit(chunk_us)))
-    wl = Window.partitionBy(*pb, "_chunk").orderBy(*ob)
-    prev = F.lag(F.col(ts)).over(wl)
-    new_flag = F.when(
-        prev.isNull() | ((_epoch_us(F.col(ts)) - _epoch_us(prev)) > F.lit(gap_us)), 1
-    ).otherwise(0)
-    run = Window.partitionBy(*pb, "_chunk").orderBy(*ob).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    d = d.withColumn("_local", F.sum(new_flag).over(run))
-
-    if persist:
-        d = d.persist()  # summary + join both read d: avoid upstream recompute
-
-    summary = d.groupBy(*pb, "_chunk").agg(
-        F.min(ts).alias("_first_ts"),
-        F.max(ts).alias("_last_ts"),
-        F.max("_local").alias("_n_sessions"),
-    )
-    ws = Window.partitionBy(*pb).orderBy("_chunk")
-    prev_last = F.lag("_last_ts").over(ws)
-    merge = F.when(
-        prev_last.isNotNull()
-        & ((_epoch_us(F.col("_first_ts")) - _epoch_us(prev_last)) <= F.lit(gap_us)),
-        1,
-    ).otherwise(0)
-    cum_prev_sessions = F.coalesce(
-        F.sum("_n_sessions").over(ws.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0)
-    )
-    cum_merges = F.sum(merge).over(ws.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    offsets = summary.select(
-        *pb, "_chunk", (cum_prev_sessions - cum_merges).alias("_offset")
-    )
-
-    joined = d.join(F.broadcast(offsets), on=[*pb, "_chunk"], how="left")
-    return joined.withColumn(out, F.col("_local") + F.col("_offset")).drop(
-        "_chunk", "_local", "_offset"
-    )
-
-
-def with_ffill_scalable(
-    df: DataFrame,
-    cols: list[str],
-    ts: str = "ingest_ts",
-    partition_by: str | list[str] = "source",
-    order_tiebreak: list[str] | None = None,
-    chunk_seconds: float = 86400.0,
-    persist: bool = True,
-) -> DataFrame:
-    """Skew-proof forward-fill — same two-phase chunking as
-    ``with_session_id_scalable``: local ffill per (key, chunk), then the
-    last non-null value of each chunk is carried forward across chunks by
-    one lightweight window over the per-chunk summary and coalesced under
-    null prefixes.  Identical output to ``with_ffill`` (tested property);
-    still leakage-free (carry stops strictly before the current chunk and
-    the local frame ends at the current row)."""
-    pb = [partition_by] if isinstance(partition_by, str) else partition_by
-    ob: list[Column | str] = [ts] + (order_tiebreak or [])
-    chunk_us = int(chunk_seconds * 1_000_000)
-
-    d = df.withColumn("_chunk", F.floor(_epoch_us(F.col(ts)) / F.lit(chunk_us)))
-    wl = Window.partitionBy(*pb, "_chunk").orderBy(*ob).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    order_struct = F.struct(*[F.col(ts)] + [F.col(c) for c in (order_tiebreak or [])])
-    for c in cols:
-        d = d.withColumn(f"{c}_ffill", F.last(c, ignorenulls=True).over(wl))
-
-    if persist:
-        d = d.persist()  # summary + join both read d: avoid upstream recompute
-
-    summary = d.groupBy(*pb, "_chunk").agg(
-        *[F.max_by(f"{c}_ffill", order_struct).alias(f"_chunk_last_{c}") for c in cols]
-    )
-    ws = Window.partitionBy(*pb).orderBy("_chunk").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    carries = summary.select(
-        *pb, "_chunk",
-        *[
-            F.last(f"_chunk_last_{c}", ignorenulls=True).over(ws).alias(f"_carry_{c}")
-            for c in cols
-        ],
-    )
-    joined = d.join(F.broadcast(carries), on=[*pb, "_chunk"], how="left")
-    for c in cols:
-        joined = joined.withColumn(
-            f"{c}_ffill", F.coalesce(F.col(f"{c}_ffill"), F.col(f"_carry_{c}"))
-        ).drop(f"_carry_{c}")
-    return joined.drop("_chunk")
-
-
-def with_lag_lead_scalable(
-    df: DataFrame,
-    cols: list[str],
-    ts: str = "ingest_ts",
-    partition_by: str | list[str] = "source",
-    order_tiebreak: list[str] | None = None,
-    chunk_seconds: float = 86400.0,
-    persist: bool = True,
-) -> DataFrame:
-    """Skew-proof lag(1)/lead(1) — chunked with boundary-row exchange.
-
-    Local lag/lead run per (key, chunk); only each chunk's first row needs
-    the previous chunk's last value (and the last row the next chunk's
-    first), which one lightweight window over the per-chunk summary
-    provides.  Identical output to ``with_lag_lead(n=1)``; wall-clock
-    bounded by the heaviest (key, chunk), not the heaviest key.
-    """
-    pb = [partition_by] if isinstance(partition_by, str) else partition_by
-    ob: list[Column | str] = [ts] + (order_tiebreak or [])
-    chunk_us = int(chunk_seconds * 1_000_000)
-    order_struct = F.struct(*[F.col(ts)] + [F.col(c) for c in (order_tiebreak or [])])
-
-    d = df.withColumn("_chunk", F.floor(_epoch_us(F.col(ts)) / F.lit(chunk_us)))
-    wl = Window.partitionBy(*pb, "_chunk").orderBy(*ob)
-    d = d.withColumn("_rn", F.row_number().over(wl)).withColumn(
-        "_cnt", F.count("*").over(Window.partitionBy(*pb, "_chunk"))
-    )
-    for c in cols:
-        d = d.withColumn(f"_lag_{c}", F.lag(c).over(wl)).withColumn(
-            f"_lead_{c}", F.lead(c).over(wl)
-        )
-
-    if persist:
-        d = d.persist()  # summary + join both read d: avoid upstream recompute
-
-    summary = d.groupBy(*pb, "_chunk").agg(
-        *[F.min_by(c, order_struct).alias(f"_first_{c}") for c in cols],
-        *[F.max_by(c, order_struct).alias(f"_last_{c}") for c in cols],
-    )
-    ws = Window.partitionBy(*pb).orderBy("_chunk")
-    boundary = summary.select(
-        *pb, "_chunk",
-        *[F.lag(f"_last_{c}").over(ws).alias(f"_prev_{c}") for c in cols],
-        *[F.lead(f"_first_{c}").over(ws).alias(f"_next_{c}") for c in cols],
-    )
-    d = d.join(F.broadcast(boundary), on=[*pb, "_chunk"], how="left")
-    for c in cols:
-        d = (
-            d.withColumn(
-                f"{c}_lag1",
-                F.when(F.col("_rn") == 1, F.col(f"_prev_{c}")).otherwise(F.col(f"_lag_{c}")),
-            )
-            .withColumn(
-                f"{c}_lead1",
-                F.when(F.col("_rn") == F.col("_cnt"), F.col(f"_next_{c}")).otherwise(
-                    F.col(f"_lead_{c}")
-                ),
-            )
-            .drop(f"_lag_{c}", f"_lead_{c}", f"_prev_{c}", f"_next_{c}")
-        )
-    return d.drop("_chunk", "_rn", "_cnt")
 
 
 def with_temporal_bundle_scalable(
@@ -451,24 +238,41 @@ def with_temporal_bundle_scalable(
     session_out: str = "session_seq",
     order_tiebreak: list[str] | None = None,
     chunk_seconds: float = 86400.0,
-    persist: bool = True,
 ) -> DataFrame:
-    """Fused skew-proof ffill + lag/lead(1) + sessionize in ONE pass.
+    """Skew-proof forward-fill, lag/lead(1) and gap sessionization in one
+    chunked pass; pass any subset of ``ffill_cols`` / ``lag_cols`` /
+    ``gap_seconds``.
 
-    Running the three chunked operators separately triples the plan: each
-    one's summary branch re-reads (and without caching, RECOMPUTES) the
-    whole upstream — on the flagship that meant the extraction UDF and the
-    as-of cogroup executing once per operator.  This bundle shares:
+    A plain ``Window.partitionBy(key)`` serializes each key into one
+    task, so one Zipf-heavy key bounds the whole stage's wall-clock.
+    Here:
 
-    * one chunked local-window pass (all specs use the same
-      partition/order, so Catalyst fuses them into a single Window node);
-    * one per-(key, chunk) summary aggregation;
-    * one boundary-reconciliation window over the (tiny) summary;
-    * one broadcast join back.
+    1. rows are split into fixed time chunks (``floor(ts / chunk)``), so
+       a heavy key's stream spreads over many (key, chunk) tasks;
+    2. ffill, lag/lead and the session flag + running sum run locally
+       per (key, chunk) — all specs share one partition/order, so
+       Catalyst fuses them into a single Window node;
+    3. one per-(key, chunk) summary (first/last ts, #sessions, last
+       non-null ffill value, first/last lag value) is reconciled by one
+       lightweight window over chunk order:
 
-    ``persist=True`` pins the branch point (local-window output) so the
-    summary branch reads cache instead of recomputing the upstream
-    (MEMORY_AND_DISK — spills, never OOMs, at warehouse scale).
+       * sessions: ``offset(c) = Σ_{c'<c} n_sessions(c') − Σ_{c'≤c}
+         merge(c')`` where ``merge(c)=1`` iff chunk c's first event
+         continues the previous chunk's last session (gap ≤ threshold);
+       * ffill: the last non-null value of earlier chunks fills the
+         chunk's null prefix (carry stops strictly before the current
+         chunk, so it stays leakage-free);
+       * lag/lead: a chunk's first row takes the previous chunk's last
+         value, its last row the next chunk's first;
+    4. the tiny boundary table broadcast-joins back.
+
+    Output is identical to ``with_ffill`` / ``with_lag_lead(n=1)`` /
+    ``with_session_id`` for any chunk width (tested property);
+    wall-clock is bounded by the heaviest (key, chunk), not the heaviest
+    key.  The summary and the join both read the local-window output,
+    so it is persisted (MEMORY_AND_DISK) in the single
+    ``temporal_bundle`` slot (``functions.persist_slot``): the upstream
+    runs once, and the next call releases the previous call's cache.
     """
     pb = [partition_by] if isinstance(partition_by, str) else partition_by
     ob: list[Column | str] = [ts] + (order_tiebreak or [])
@@ -499,8 +303,7 @@ def with_temporal_bundle_scalable(
         ).otherwise(0)
         d = d.withColumn("_local", F.sum(new_flag).over(run))
 
-    if persist:
-        d = d.persist()
+    d = persist_slot(d, slot="temporal_bundle")
 
     aggs = []
     if gap_seconds is not None:
@@ -575,9 +378,8 @@ def with_trailing_agg(
     current row included — no future rows, so leakage-free."""
     pb = [partition_by] if isinstance(partition_by, str) else partition_by
     funcs = funcs or {"avg": "avg", "count": "count"}
-    epoch = F.unix_micros(F.col(ts).cast("timestamp"))
     span = int(window_seconds * 1_000_000)
-    w = Window.partitionBy(*pb).orderBy(epoch).rangeBetween(-span, 0)
+    w = Window.partitionBy(*pb).orderBy(_epoch_us(F.col(ts))).rangeBetween(-span, 0)
     for name, fn in funcs.items():
         df = df.withColumn(f"{value}_trailing_{name}", getattr(F, fn)(F.col(value)).over(w))
     return df
@@ -619,8 +421,7 @@ def time_resample(
     step = int(interval_seconds)
     if step <= 0:
         raise ValueError("interval_seconds must be positive")
-    epoch = F.unix_micros(F.col(ts).cast("timestamp"))
-    bucket = F.floor(epoch / F.lit(step * 1_000_000)).cast("long")
+    bucket = F.floor(_epoch_us(F.col(ts)) / F.lit(step * 1_000_000)).cast("long")
     agg = (
         df.select(F.col(entity), bucket.alias("bucket"),
                   F.col(value).cast("double").alias("_v"))

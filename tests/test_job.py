@@ -59,12 +59,15 @@ def test_job_commit_and_resume(spark, dirs):
 
 
 def test_package_zip_complete(tmp_path):
+    # writes into tmp_path: the default dist/ target stays untouched
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    zpath = str(tmp_path / "gbdc_spark.zip")
     r = subprocess.run(
-        [sys.executable, "tools/package.py"], capture_output=True, text=True,
-        cwd="/root/repo",
+        [sys.executable, os.path.join(root, "tools", "package.py"), zpath],
+        capture_output=True, text=True,
     )
     assert r.returncode == 0
-    zpath = r.stdout.strip()
+    assert r.stdout.strip() == zpath
     names = zipfile.ZipFile(zpath).namelist()
     for mod in [
         "gbdc_spark/job.py", "gbdc_spark/api.py", "gbdc_spark/cli.py",

@@ -1670,9 +1670,32 @@ def test_group_auc_single_class_group_is_null(spark):
     assert out["mixed"]["auc"] == 1.0
 
 
-def test_psi_matches_python_reference(spark):
+def _psi_reference(ref_vals, new_vals, bins, eps=1e-6):
+    """Pure-Python PSI over equal-width bins of the non-NULL ref range."""
     import math
 
+    ref_vals = [v for v in ref_vals if v is not None]
+    new_vals = [v for v in new_vals if v is not None]
+    lo, hi = min(ref_vals), max(ref_vals)
+
+    def binof(v):
+        return int(min(max(math.floor((v - lo) * bins / (hi - lo)), 0), bins - 1))
+
+    pc = [0] * bins
+    qc = [0] * bins
+    for v in ref_vals:
+        pc[binof(v)] += 1
+    for v in new_vals:
+        qc[binof(v)] += 1
+    np_, nq = len(ref_vals), len(new_vals)
+    return sum(
+        (max(q / nq, eps) - max(p / np_, eps))
+        * math.log(max(q / nq, eps) / max(p / np_, eps))
+        for p, q in zip(pc, qc)
+    ), pc, qc
+
+
+def test_psi_matches_python_reference(spark):
     from gbdc_spark.operators.quality import population_stability
 
     ref_vals = [1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0, 9.0, 10.0]
@@ -1680,26 +1703,30 @@ def test_psi_matches_python_reference(spark):
     ref = spark.createDataFrame([(v,) for v in ref_vals], "s double")
     new = spark.createDataFrame([(v,) for v in new_vals], "s double")
     out = population_stability(ref, new, "s", bins=5).collect()[0]
-    lo, hi = min(ref_vals), max(ref_vals)
-
-    def binof(v):
-        return int(min(max(math.floor((v - lo) * 5 / (hi - lo)), 0), 4))
-
-    eps = 1e-6
-    pc = [0] * 5
-    qc = [0] * 5
-    for v in ref_vals:
-        pc[binof(v)] += 1
-    for v in new_vals:
-        qc[binof(v)] += 1
-    psi = sum(
-        (max(q / 10, eps) - max(p / 10, eps))
-        * math.log(max(q / 10, eps) / max(p / 10, eps))
-        for p, q in zip(pc, qc)
-    )
+    psi, _, _ = _psi_reference(ref_vals, new_vals, bins=5)
     assert out["n_ref"] == 10 and out["n_new"] == 10
     assert out["psi"] == pytest.approx(round(psi, 6), abs=1e-6)
     assert out["psi"] > 0.1  # the shifted distribution reads as drift
+
+
+def test_psi_ignores_null_scores(spark):
+    # NULL scores must fall in no bin (greatest(NULL, 0) would put them
+    # in bin 0) and count in neither population
+    from gbdc_spark.operators.quality import population_stability, psi_bins
+
+    ref_vals = [None, 0.0, 1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, None]
+    new_vals = [None, None, None, 5.0, 6.0, 7.0, 7.0]
+    ref = spark.createDataFrame([(v,) for v in ref_vals], "s double")
+    new = spark.createDataFrame([(v,) for v in new_vals], "s double")
+    psi, pc, qc = _psi_reference(ref_vals, new_vals, bins=4)
+
+    bins = {r["bin"]: r["n"] for r in psi_bins(new, "s", 0.0, 7.0, bins=4).collect()}
+    assert bins == {b: n for b, n in enumerate(qc) if n}
+    assert 0 not in bins  # where the three NULLs used to land
+
+    out = population_stability(ref, new, "s", bins=4).collect()[0]
+    assert out["n_ref"] == sum(pc) == 8 and out["n_new"] == sum(qc) == 4
+    assert out["psi"] == pytest.approx(round(psi, 6), abs=1e-6)
 
 
 def test_psi_identical_distributions_near_zero(spark):

@@ -166,33 +166,6 @@ def test_trailing_agg(spark):
     assert got == [1.0, 1.5, 2.5, 4.0]
 
 
-def test_asof_join_narrow_key_equals_wide(spark):
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    from pyspark.sql import functions as F
-    left = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value", "props"
-    )
-    right = ev.filter(F.col("event_type") == "click").select(
-        F.col("user_id"), F.col("ts").alias("r_ts"),
-        F.col("event_id").alias("r_id"),
-    )
-    from gbdc_spark.operators import temporal
-    wide = temporal.asof_join(
-        left, right, by="user_id", left_ts="ts", right_ts="r_ts",
-        allow_exact_matches=False, right_tiebreak=["r_id"],
-    )
-    narrow = temporal.asof_join(
-        left, right, by="user_id", left_ts="ts", right_ts="r_ts",
-        allow_exact_matches=False, right_tiebreak=["r_id"],
-        narrow_key=["event_id"],
-    )
-    cols = sorted(wide.columns)
-    assert sorted(narrow.columns) == cols
-    a = sorted(tuple(r) for r in wide.select(*cols).collect())
-    b = sorted(tuple(r) for r in narrow.select(*cols).collect())
-    assert a == b
-
-
 def test_asof_buckets_autoscale_with_input_size(spark):
     """Bucket count must grow with the input size estimate (each bucket's
     left+right is one pandas frame at merge time) and never drop below

@@ -1,5 +1,5 @@
-"""Chunk-carry property tests for the scalable window family
-(temporal.with_*_scalable) at ADVERSARIAL chunk boundaries:
+"""Chunk-carry property tests for the scalable window bundle
+(temporal.with_temporal_bundle_scalable) at ADVERSARIAL chunk boundaries:
 
 * sessions / ffill runs / lag-lead neighbours spanning many chunks,
 * duplicate timestamps exactly AT a chunk edge (ties broken by id),
@@ -8,12 +8,13 @@
 * all-null ffill chunks and null prefixes.
 
 Each hypothesis example builds several keys' worth of adversarial
-streams, runs the three scalable operators in ONE Spark roundtrip per
-operator, and compares against pure-Python oracles (not the plain
-window variants — an independent reimplementation, so a shared bug
-can't self-certify).  The sf0.001 width-sweep equivalence tests live in
-test_temporal_scalable.py; these lock the carry edge cases so a
-refactor of the summary/offset algebra cannot drift silently.
+streams, runs the bundle ONCE with sessionize, ffill and lag/lead fused
+(the flagship's configuration), and compares all three outputs against
+a pure-Python oracle (not the plain window variants — an independent
+reimplementation, so a shared bug can't self-certify).  The sf0.001
+width-sweep equivalence tests live in test_temporal_scalable.py; these
+lock the carry edge cases so a refactor of the summary/offset algebra
+cannot drift silently.
 """
 
 import datetime as dt
@@ -85,28 +86,20 @@ def test_scalable_family_matches_python_oracle_at_chunk_edges(spark, streams):
     )
     expected = _oracle(rows)
 
-    sess = temporal.with_session_id_scalable(
-        df, ts="ts", partition_by="key", gap_seconds=GAP,
-        order_tiebreak=["event_id"], chunk_seconds=CHUNK,
-    )
-    ff = temporal.with_ffill_scalable(
-        df, cols=["val"], ts="ts", partition_by="key",
-        order_tiebreak=["event_id"], chunk_seconds=CHUNK,
-    )
-    ll = temporal.with_lag_lead_scalable(
-        df, cols=["val"], ts="ts", partition_by="key",
-        order_tiebreak=["event_id"], chunk_seconds=CHUNK,
-    )
-    got_sess = {(r["key"], r["event_id"]): r["session_seq"]
-                for r in sess.collect()}
-    got_ff = {(r["key"], r["event_id"]): r["val_ffill"] for r in ff.collect()}
-    got_ll = {(r["key"], r["event_id"]): (r["val_lag1"], r["val_lead1"])
-              for r in ll.collect()}
+    got = {
+        (r["key"], r["event_id"]): r
+        for r in temporal.with_temporal_bundle_scalable(
+            df, ts="ts", partition_by="key", ffill_cols=["val"],
+            lag_cols=["val"], gap_seconds=GAP,
+            order_tiebreak=["event_id"], chunk_seconds=CHUNK,
+        ).collect()
+    }
     for key, recs in expected.items():
         for eid, s, f_, lag, lead in recs:
-            assert got_sess[(key, eid)] == s, (key, eid, "session")
-            assert got_ff[(key, eid)] == f_, (key, eid, "ffill")
-            assert got_ll[(key, eid)] == (lag, lead), (key, eid, "lag/lead")
+            r = got[(key, eid)]
+            assert r["session_seq"] == s, (key, eid, "session")
+            assert r["val_ffill"] == f_, (key, eid, "ffill")
+            assert (r["val_lag1"], r["val_lead1"]) == (lag, lead), (key, eid, "lag/lead")
 
 
 def test_session_spans_thirty_chunks_and_duplicate_edge_ts(spark):
@@ -120,7 +113,7 @@ def test_session_spans_thirty_chunks_and_duplicate_edge_ts(spark):
     rows += [("b", f"f{i}", BASE + dt.timedelta(seconds=86_400 * i), i)
              for i in range(3)]
     df = spark.createDataFrame(rows, "key string, event_id string, ts timestamp, val int")
-    sess = temporal.with_session_id_scalable(
+    sess = temporal.with_temporal_bundle_scalable(
         df, ts="ts", partition_by="key", gap_seconds=GAP,
         order_tiebreak=["event_id"], chunk_seconds=CHUNK,
     )
@@ -129,8 +122,8 @@ def test_session_spans_thirty_chunks_and_duplicate_edge_ts(spark):
     assert out["e000b"] == 1
     assert [out[f"f{i}"] for i in range(3)] == [1, 2, 3]
     # ffill carries a value set before 30 empty-for-val chunks
-    ff = temporal.with_ffill_scalable(
-        df, cols=["val"], ts="ts", partition_by="key",
+    ff = temporal.with_temporal_bundle_scalable(
+        df, ts="ts", partition_by="key", ffill_cols=["val"],
         order_tiebreak=["event_id"], chunk_seconds=CHUNK,
     )
     vals = {r["event_id"]: r["val_ffill"] for r in ff.filter(F.col("key") == "a").collect()}
