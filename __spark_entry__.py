@@ -3339,7 +3339,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # DuckDB oracle, value-checking the E2E pipeline end to end.
         seqs = tables.documents_as_sequences(spark, sf_dir)
         snaps = tables.derived_snapshots_df(seqs)
-        feats = extract.extract_all(seqs).drop("tokens")
+        feats = extract.extract_all(seqs)
         joined = temporal.asof_join(
             feats, snaps, by="doc_id", left_ts="ingest_ts",
             right_ts="snapshot_ts", allow_exact_matches=False,

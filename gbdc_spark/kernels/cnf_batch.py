@@ -10,6 +10,8 @@ mean/variance can differ on large docs — far inside the reference's own
 1e-5 tolerance (tests_cnfbasefeatures.cc:15-19).
 
 Construction notes:
+* input is the flat buffer + offsets of an Arrow ``list<int>`` column,
+  so no per-doc array is ever built;
 * every doc's token stream is closed with a terminating 0 if missing;
 * per-(doc,var) dense arrays live in one global index space via
   ``var_offset[d] + var`` with ``n_vars_d + 1`` slots per doc (slot 0
@@ -27,6 +29,7 @@ from __future__ import annotations
 import numpy as np
 
 from .cnf import BASE_FEATURES_NAMES
+from .tokens import close_docs
 
 __all__ = ["cnf_base_features_batch"]
 
@@ -65,14 +68,15 @@ def _seg_dist(values: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.nd
         keys = np.trunc(v).astype(np.int64)
     else:
         keys = values.astype(np.int64)
-    order = np.lexsort((keys, seg_of))
-    ks, ss = keys[order], seg_of[order]
-    new_run = np.empty(ks.size, dtype=bool)
-    new_run[0] = True
-    new_run[1:] = (ks[1:] != ks[:-1]) | (ss[1:] != ss[:-1])
-    run_starts = np.flatnonzero(new_run)
-    run_seg = ss[run_starts]
-    run_counts = np.diff(np.append(run_starts, ks.size))
+    # one segment-major (segment, key) code per element: a single sort
+    # puts the runs in (segment, key) order
+    kmin = keys.min()
+    span = int(keys.max() - kmin) + 1
+    code = np.sort(seg_of * span + (keys - kmin))
+    run_starts = np.flatnonzero(np.concatenate(([True], code[1:] != code[:-1])))
+    run_code = code[run_starts]
+    run_counts = np.diff(np.append(run_starts, code.size))
+    run_seg = run_code // span
     k_per_seg = np.bincount(run_seg, minlength=n_seg)
 
     n_full = np.zeros(n_seg)
@@ -97,72 +101,41 @@ def _seg_ccs(gvar_of_lit: np.ndarray, cid: np.ndarray, var_offset: np.ndarray,
     """Component count per doc over the global var index space."""
     n_docs = n_vars_doc.size
     total = int(var_offset[-1])
-    counts = np.zeros(n_docs, dtype=np.int64)
+    labels = np.arange(total, dtype=np.int64)
     if gvar_of_lit.size:
         # cid is nondecreasing (docs and clauses are stream-ordered), so
-        # clause groups need no sort; vars need one argsort, then every
-        # iteration is gather + reduceat — no slow ufunc.at
+        # clause groups need no sort: each round is a clause-min reduceat,
+        # a scatter-min back onto the vars, then pointer jumping
         sv = gvar_of_lit
-        clause_starts = np.flatnonzero(
-            np.concatenate(([True], cid[1:] != cid[:-1]))
-        )
-        clause_of_lit = np.cumsum(
-            np.concatenate(([0], (cid[1:] != cid[:-1]).astype(np.int64)))
-        )
-        order_v = np.argsort(sv, kind="stable")
-        sv_sorted = sv[order_v]
-        cl_of_lit_v = clause_of_lit[order_v]
-        var_group_starts = np.flatnonzero(
-            np.concatenate(([True], sv_sorted[1:] != sv_sorted[:-1]))
-        )
-        var_ids = sv_sorted[var_group_starts]
-        labels = np.arange(total, dtype=np.int64)
+        new_clause = np.concatenate(([True], cid[1:] != cid[:-1]))
+        clause_starts = np.flatnonzero(new_clause)
+        clause_of_lit = np.cumsum(new_clause) - 1
         while True:
             cl_min = np.minimum.reduceat(labels[sv], clause_starts)
-            var_min = np.minimum.reduceat(cl_min[cl_of_lit_v], var_group_starts)
             new = labels.copy()
-            new[var_ids] = np.minimum(new[var_ids], var_min)
+            np.minimum.at(new, sv, cl_min[clause_of_lit])
             new = new[new]  # pointer jumping
             if np.array_equal(new, labels):
                 break
             labels = new
-        # distinct labels among the var slots 1..n_vars of each doc
-        keep = np.ones(total, dtype=bool)
-        keep[var_offset[:-1]] = False  # drop every doc's 0 slot
-        lbl = labels[keep]
-        pos = np.flatnonzero(keep)
-        uniq_mask = np.zeros(total, dtype=bool)
-        uniq_mask[lbl] = False  # init
-        # count distinct labels per doc: sort (doc, label), run-length
-        doc_of = np.searchsorted(var_offset, pos, side="right") - 1
-        order2 = np.lexsort((lbl, doc_of))
-        l2, d2 = lbl[order2], doc_of[order2]
-        new_run = np.empty(l2.size, dtype=bool)
-        if l2.size:
-            new_run[0] = True
-            new_run[1:] = (l2[1:] != l2[:-1]) | (d2[1:] != d2[:-1])
-            counts = np.bincount(d2[new_run], minlength=n_docs)
-    else:
-        counts = n_vars_doc.copy()
-    # docs with no literals: every var its own component (none if n_vars=0)
-    return counts
+    # at the fixed point every component is labelled by its smallest
+    # slot, so a doc's components are its roots; each doc's 0 slot is an
+    # isolated root of its own and is not a var
+    roots = labels == np.arange(total)
+    roots[var_offset[:-1]] = False
+    return np.bincount(np.repeat(np.arange(n_docs), np.diff(var_offset))[roots],
+                       minlength=n_docs)
 
 
-def cnf_base_features_batch(docs: list[np.ndarray]) -> np.ndarray:
-    n_docs = len(docs)
+def cnf_base_features_batch(values, offsets) -> np.ndarray:
+    """(n_docs, 58) base features of a flat token buffer: doc i is
+    ``values[offsets[i]:offsets[i + 1]]`` (an Arrow ListArray's flat
+    values and offsets; ``offsets[0]`` may be nonzero)."""
+    T, offs = close_docs(values, offsets)
+    n_docs = offs.size - 1
     if n_docs == 0:
         return np.zeros((0, len(BASE_FEATURES_NAMES)))
-
-    arrs = [np.asarray(t, dtype=np.int64).ravel() for t in docs]
-    doc_len = np.fromiter((a.size for a in arrs), dtype=np.int64, count=n_docs)
-    T = np.concatenate(arrs) if arrs else np.zeros(0, np.int64)
-    # close unterminated docs with one vectorized insert (rare path)
-    ends = np.cumsum(doc_len) - 1
-    open_docs = np.flatnonzero((doc_len > 0) & (T[np.maximum(ends, 0)] != 0))
-    if open_docs.size:
-        T = np.insert(T, ends[open_docs] + 1, 0)
-        doc_len = doc_len.copy()
-        doc_len[open_docs] += 1
+    doc_len = np.diff(offs)
     doc_of_tok = np.repeat(np.arange(n_docs), doc_len)
 
     is_lit = T != 0

@@ -3,7 +3,10 @@
 Numpy/python kernels re-expressing /root/reference/src/identify/GBDHash.h
 and ISOHash.h.  Tokens-based variants take the DIMACS integer stream; the
 *_text variants take raw payload text and replicate the parser quirks
-(leading zeros kept, '+' dropped — StreamBuffer.h:288-314).
+(leading zeros kept, '+' dropped — StreamBuffer.h:288-314).  The CNF
+*_batch variants hash every doc of a flat multi-doc token buffer (an
+Arrow list column's values + offsets) with no per-doc Python but the
+MD5 call; the per-doc kernels are their oracle.
 
 Replicated quirks:
 * WCNF gbdhash: the new-format 'h' branch never sets ``notfirst``, so the
@@ -19,18 +22,22 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from .scan import Scanner
-from .tokens import as_tokens
+from .tokens import as_tokens, close_docs
 
 __all__ = [
     "gbdhash_cnf",
+    "gbdhash_cnf_batch",
     "gbdhash_cnf_text",
     "gbdhash_pqbf_text",
     "gbdhash_wcnf",
     "gbdhash_wcnf_text",
     "gbdhash_opb_text",
     "isohash_cnf",
+    "isohash_cnf_batch",
     "isohash_wcnf",
 ]
 
@@ -51,6 +58,28 @@ def gbdhash_cnf(tokens) -> str:
     if tokens[-1] != 0:
         parts += " 0"
     return _md5(parts.encode())
+
+
+def _join_docs(items: np.ndarray, offsets: np.ndarray) -> pa.Array:
+    """Per doc ``items[offsets[i]:offsets[i + 1]]`` in decimal, joined
+    by single spaces — one Arrow cast + list join for the whole batch."""
+    texts = pc.cast(pa.array(items, pa.int64()), pa.large_string())
+    docs = pa.LargeListArray.from_arrays(pa.array(offsets, pa.int64()), texts)
+    return pc.binary_join(docs, pa.scalar(" ", pa.large_string()))
+
+
+def _md5_each(texts: pa.Array, tail: bytes = b"") -> np.ndarray:
+    """MD5 hex digest of each text, ``tail`` appended to nonempty ones."""
+    return np.array([_md5(b + tail if b else b)
+                     for b in texts.cast(pa.large_binary()).to_pylist()], dtype=object)
+
+
+def gbdhash_cnf_batch(values, offsets) -> np.ndarray:
+    """:func:`gbdhash_cnf` for every doc of a flat token buffer (doc i
+    is ``values[offsets[i]:offsets[i + 1]]``): close unterminated docs,
+    render and join all docs in Arrow, then one MD5 per doc."""
+    vals, offs = close_docs(values, offsets)
+    return _md5_each(_join_docs(vals, offs))
 
 
 def gbdhash_cnf_text(text: str) -> str:
@@ -279,6 +308,47 @@ def isohash_cnf(tokens) -> str:
     pairs = _degree_pairs(pos.astype(np.int64), neg.astype(np.int64))
     buf = "".join(f"{a} {b} " for a, b in pairs.tolist())
     return _md5(buf.encode())
+
+
+def isohash_cnf_batch(values, offsets) -> np.ndarray:
+    """:func:`isohash_cnf` for every doc of a flat token buffer.
+
+    Var ``v`` of doc ``d`` lives at slot ``var_offset[d] + v - 1`` of one
+    global space, so two bincounts give every doc's polarity counts; one
+    lexsort keyed (doc, lo, hi) orders all degree pairs, and an Arrow
+    join renders each doc's ``"lo hi "`` text.  Like the per-doc kernel,
+    the space is dense: it holds every doc's max var id.
+    """
+    values = as_tokens(values)
+    offsets = np.asarray(offsets, dtype=np.int64)
+    n_docs = offsets.size - 1
+    toks = values[offsets[0]:offsets[-1]]
+    doc_of_tok = np.repeat(np.arange(n_docs), np.diff(offsets))
+    is_lit = toks != 0
+    lits = toks[is_lit]
+    doc = doc_of_tok[is_lit]
+    vars_ = np.abs(lits)
+    lit_n = np.bincount(doc, minlength=n_docs)
+    has = lit_n > 0
+    n_vars = np.zeros(n_docs, dtype=np.int64)
+    if lits.size:  # docs are contiguous: one segmented max
+        n_vars[has] = np.maximum.reduceat(vars_, (np.cumsum(lit_n) - lit_n)[has])
+    var_offset = np.concatenate(([0], np.cumsum(n_vars)))
+    slot = var_offset[doc] + vars_ - 1
+    total = int(var_offset[-1])
+    pos = np.bincount(slot[lits > 0], minlength=total)
+    neg = np.bincount(slot[lits < 0], minlength=total)
+    lo, hi = np.minimum(pos, neg), np.maximum(pos, neg)
+    keep = hi > 0
+    lo, hi = lo[keep], hi[keep]
+    slot_doc = np.repeat(np.arange(n_docs), n_vars)[keep]
+    order = np.lexsort((hi, lo, slot_doc))
+    pairs = np.empty(2 * lo.size, dtype=np.int64)
+    pairs[0::2], pairs[1::2] = lo[order], hi[order]
+    n_pairs = np.bincount(slot_doc, minlength=n_docs)
+    texts = _join_docs(pairs, np.concatenate(([0], np.cumsum(2 * n_pairs))))
+    # the per-doc text is "lo hi " per pair: a nonempty doc ends in a space
+    return _md5_each(texts, tail=b" ")
 
 
 def isohash_wcnf(weights, top: int, tokens) -> str:

@@ -12,6 +12,7 @@ import numpy as np
 
 __all__ = [
     "as_tokens",
+    "close_docs",
     "clause_ids",
     "n_clauses_of",
     "clause_sizes_of",
@@ -24,6 +25,28 @@ __all__ = [
 def as_tokens(tokens) -> np.ndarray:
     """Coerce list/array into a contiguous int64 working array."""
     return np.asarray(tokens, dtype=np.int64)
+
+
+def close_docs(values: np.ndarray, offsets: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Flat multi-doc token buffer -> the same docs, each nonempty doc
+    closed with a terminating 0 if it lacks one.
+
+    Doc ``i`` is ``values[offsets[i]:offsets[i + 1]]``; ``offsets[0]``
+    may be nonzero (an Arrow slice).  Returns ``(values, offsets)`` with
+    ``offsets[0] == 0``; one vectorized insert, no per-doc Python.
+    """
+    values = as_tokens(values)
+    offsets = np.asarray(offsets, dtype=np.int64)
+    vals = values[offsets[0]:offsets[-1]]
+    lens = np.diff(offsets)
+    ends = offsets[1:] - offsets[0] - 1
+    open_docs = np.flatnonzero((lens > 0) & (vals[np.maximum(ends, 0)] != 0)) \
+        if vals.size else ends[:0]
+    if open_docs.size:
+        vals = np.insert(vals, ends[open_docs] + 1, 0)
+        lens = lens.copy()
+        lens[open_docs] += 1
+    return vals, np.concatenate(([0], np.cumsum(lens)))
 
 
 def clause_ids(tokens: np.ndarray) -> tuple[np.ndarray, np.ndarray, int]:

@@ -272,6 +272,13 @@ def weighted_jaccard_pairs(
     )
 
 
+def _comb2(c: str) -> Column:
+    """C(c, 2) of a long column in exact integer math: c*(c-1) is even,
+    so ``div`` loses nothing, where a double ``/`` rounds once c*(c-1)
+    passes 2^53."""
+    return F.expr(f"{c} * ({c} - 1) div 2")
+
+
 def clustering_agreement(
     a: DataFrame, b: DataFrame, key: str = "doc_id",
     col_a: str = "cluster", col_b: str = "cluster",
@@ -309,22 +316,21 @@ def clustering_agreement(
             b.select(F.col(key), F.col(col_b).alias("_cb")), key, "inner"
         )
     )
-    comb2 = lambda c: (c * (c - 1) / 2).cast("long")  # noqa: E731
     cells = (
         j.groupBy("_ca", "_cb").agg(F.count("*").alias("_c"))
-        .agg(F.sum(comb2(F.col("_c"))).alias("sum_comb_ij"),
+        .agg(F.sum(_comb2("_c")).alias("sum_comb_ij"),
              F.sum("_c").alias("n"))
     )
     ma = (
         j.groupBy("_ca").agg(F.count("*").alias("_c"))
-        .agg(F.sum(comb2(F.col("_c"))).alias("sum_comb_a"))
+        .agg(F.sum(_comb2("_c")).alias("sum_comb_a"))
     )
     mb = (
         j.groupBy("_cb").agg(F.count("*").alias("_c"))
-        .agg(F.sum(comb2(F.col("_c"))).alias("sum_comb_b"))
+        .agg(F.sum(_comb2("_c")).alias("sum_comb_b"))
     )
     out = cells.crossJoin(F.broadcast(ma)).crossJoin(F.broadcast(mb))
-    c2n = comb2(F.col("n"))
+    c2n = _comb2("n")
     idx = F.col("sum_comb_ij").cast("double")
     sa = F.col("sum_comb_a").cast("double")
     sb = F.col("sum_comb_b").cast("double")

@@ -2,15 +2,21 @@
 
 Each stage mirrors one function of the reference's Python surface
 (gbdlib.cc:317-336: gbdhash, isohash, extract_base_features, ...) as a
-column-adding transformation backed by an Arrow-batched pandas UDF running
+column-adding transformation backed by an Arrow-batched UDF running
 the shared numpy kernels — never per-row Python on the JVM side
-(BASELINE.json input_hint).
+(BASELINE.json input_hint).  The CNF hash and base-feature stages read
+each batch's ``tokens`` as one flat Arrow values buffer plus offsets and
+run the segmented batch kernels (kernels/hashes.py ``*_batch``,
+kernels/cnf_batch.py); the per-doc kernels are the test oracle and the
+error fallback.
 
-The fused ``extract_all`` stage computes hash + isohash + 58 features +
-per-doc runtime/status in ONE Arrow crossing per batch — the hot path of
-the flagship pipeline.  Per-doc failures become status='error:...' rows
-instead of task failures, the Spark analogue of the reference's
-timeout/memout sentinel dicts (gbdlib.cc:106-111).
+The fused ``extract_all`` stage is one ``mapInArrow`` pass: it returns
+the input's columns minus ``tokens``, plus gbdhash, isohash, the 58
+features, ``runtime_s`` (the batch's kernel CPU time split by token
+count) and ``status`` — the hot path of the flagship pipeline.  Per-doc
+failures become status='error:...' rows instead of task failures, the
+Spark analogue of the reference's timeout/memout sentinel dicts
+(gbdlib.cc:106-111).
 """
 
 from __future__ import annotations
@@ -20,12 +26,15 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 
 from ..kernels import cnf, gates, hashes, opb, transforms, wcnf
+from ..kernels.cnf_batch import cnf_base_features_batch
 from ..schemas import (
     BASE_FEATURES_NAMES,
     OPB_BASE_FEATURES_NAMES,
@@ -55,23 +64,55 @@ __all__ = [
 
 
 # --------------------------------------------------------------- hashes
-@pandas_udf(T.StringType())
-def _gbdhash_udf(tokens: pd.Series) -> pd.Series:
-    return tokens.map(lambda t: hashes.gbdhash_cnf(np.asarray(t, dtype=np.int64)))
+def _flat_tokens(tokens: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """An Arrow ``list<int>`` column -> (int64 values, offsets), the
+    batch kernels' input; a NULL doc reads as an empty one.  Values come
+    from ``flatten()`` and offsets from the list lengths, so a slice with
+    a nonzero first offset (or a NULL entry backed by values) is safe."""
+    flat = tokens.flatten()
+    if flat.null_count:
+        raise TypeError("NULL token inside a doc")
+    lens = pc.fill_null(pc.list_value_length(tokens), 0).to_numpy()
+    offsets = np.concatenate(([0], np.cumsum(lens, dtype=np.int64)))
+    return flat.to_numpy(zero_copy_only=False).astype(np.int64, copy=False), offsets
 
 
-@pandas_udf(T.StringType())
-def _isohash_udf(tokens: pd.Series) -> pd.Series:
-    return tokens.map(lambda t: hashes.isohash_cnf(np.asarray(t, dtype=np.int64)))
+def _kernel_column(tokens: pa.Array, batch_fn, doc_fn) -> np.ndarray:
+    """One batch kernel over a whole Arrow batch; the per-doc kernel
+    only if the batch kernel raises."""
+    values, offsets = _flat_tokens(tokens)
+    try:
+        return batch_fn(values, offsets)
+    except Exception:
+        return np.array([doc_fn(values[a:b]) for a, b in zip(offsets[:-1], offsets[1:])],
+                        dtype=object)
+
+
+def _null_mask(tokens: pa.Array) -> np.ndarray:
+    return tokens.is_null().to_numpy(zero_copy_only=False)
+
+
+@arrow_udf(T.StringType())
+def _gbdhash_udf(tokens: pa.Array) -> pa.Array:
+    out = _kernel_column(tokens, hashes.gbdhash_cnf_batch, hashes.gbdhash_cnf)
+    return pa.array(out, pa.string(), mask=_null_mask(tokens))
+
+
+@arrow_udf(T.StringType())
+def _isohash_udf(tokens: pa.Array) -> pa.Array:
+    out = _kernel_column(tokens, hashes.isohash_cnf_batch, hashes.isohash_cnf)
+    return pa.array(out, pa.string(), mask=_null_mask(tokens))
 
 
 def with_gbdhash(df: DataFrame, tokens_col: str = "tokens", out: str = "gbdhash") -> DataFrame:
-    """CNF::gbdhash (GBDHash.h:30-50) as a column stage."""
+    """CNF::gbdhash (GBDHash.h:30-50) as a column stage; NULL tokens give
+    a NULL hash."""
     return df.withColumn(out, _gbdhash_udf(F.col(tokens_col)))
 
 
 def with_isohash(df: DataFrame, tokens_col: str = "tokens", out: str = "isohash") -> DataFrame:
-    """CNF::isohash (ISOHash.h:41-75) as a column stage."""
+    """CNF::isohash (ISOHash.h:41-75) as a column stage; NULL tokens give
+    a NULL hash."""
     return df.withColumn(out, _isohash_udf(F.col(tokens_col)))
 
 
@@ -85,22 +126,25 @@ def with_pqbf_hash(df: DataFrame, payload_col: str = "payload", out: str = "pqbf
 
 
 # --------------------------------------------------------- base features
-@pandas_udf(feature_struct(BASE_FEATURES_NAMES))
-def _base_features_udf(tokens: pd.Series) -> pd.DataFrame:
-    from ..kernels.cnf_batch import cnf_base_features_batch
+def _feature_arrays(feats: np.ndarray) -> list[pa.Array]:
+    """One double column per base feature; NaN becomes NULL, as the
+    pandas-to-Arrow conversion always did."""
+    return [pa.array(feats[:, j], pa.float64(), from_pandas=True)
+            for j in range(len(BASE_FEATURES_NAMES))]
 
-    arrs = [np.asarray(t, dtype=np.int64) for t in tokens]
-    try:
-        # segmented whole-batch kernel (~2x the per-doc loop)
-        feats = cnf_base_features_batch(arrs)
-    except Exception:  # per-doc fallback isolates a pathological doc
-        rows = [cnf.cnf_base_features(a) for a in arrs]
-        feats = np.vstack(rows) if rows else np.zeros((0, 58))
-    return pd.DataFrame(feats, columns=list(BASE_FEATURES_NAMES))
+
+@arrow_udf(feature_struct(BASE_FEATURES_NAMES))
+def _base_features_udf(tokens: pa.Array) -> pa.Array:
+    feats = _kernel_column(tokens, cnf_base_features_batch, cnf.cnf_base_features)
+    feats = np.asarray(feats, dtype=np.float64).reshape(-1, len(BASE_FEATURES_NAMES))
+    return pa.StructArray.from_arrays(
+        _feature_arrays(feats),
+        names=list(BASE_FEATURES_NAMES), mask=pa.array(_null_mask(tokens)))
 
 
 def with_base_features(df: DataFrame, tokens_col: str = "tokens", out: str = "features") -> DataFrame:
-    """CNF::BaseFeatures — 58-field double struct (CNFBaseFeatures.h)."""
+    """CNF::BaseFeatures — 58-field double struct (CNFBaseFeatures.h);
+    NULL tokens give a NULL struct."""
     return df.withColumn(out, _base_features_udf(F.col(tokens_col)))
 
 
@@ -301,12 +345,67 @@ EXTRACT_ALL_FIELDS = (
 )
 
 
-def _extract_all_schema(input_schema: T.StructType) -> T.StructType:
-    fields = [f for f in input_schema.fields]
+def _extract_all_schema(input_schema: T.StructType, tokens_col: str) -> T.StructType:
+    fields = [f for f in input_schema.fields if f.name != tokens_col]
     fields += [T.StructField("gbdhash", T.StringType()), T.StructField("isohash", T.StringType())]
     fields += [T.StructField(n, T.DoubleType()) for n in BASE_FEATURES_NAMES]
     fields += [T.StructField("runtime_s", T.DoubleType()), T.StructField("status", T.StringType())]
     return T.StructType(fields)
+
+
+def _extract_per_doc(tokens: pa.Array):
+    """Per-doc kernels over one batch — the error fallback: a doc that
+    raises becomes a ``status='error:<type>'`` row, never a task failure."""
+    n = len(tokens)
+    ghash = np.full(n, None, dtype=object)
+    ihash = np.full(n, None, dtype=object)
+    feats = np.full((n, len(BASE_FEATURES_NAMES)), np.nan)
+    runtime = np.zeros(n)
+    status = np.full(n, "ok", dtype=object)
+    for i in range(n):
+        t0 = time.process_time()
+        try:
+            arr = np.asarray(tokens[i].as_py(), dtype=np.int64)  # NULL -> TypeError
+            ghash[i] = hashes.gbdhash_cnf(arr)
+            ihash[i] = hashes.isohash_cnf(arr)
+            feats[i] = cnf.cnf_base_features(arr)
+        except Exception as e:
+            status[i] = f"error:{type(e).__name__}"
+        runtime[i] = time.process_time() - t0
+    return ghash, ihash, feats, runtime, status
+
+
+def _extract_batch(batch: pa.RecordBatch, tokens_col: str = "tokens") -> pa.RecordBatch:
+    """The ``extract_all`` body for one Arrow batch: the batch's other
+    columns unchanged, then gbdhash, isohash, the 58 base features,
+    runtime_s and status.  The three batch kernels read the tokens as one
+    flat buffer; if any raises, the per-doc kernels redo the batch."""
+    tokens = batch.column(tokens_col)
+    t0 = time.process_time()
+    try:
+        values, offsets = _flat_tokens(tokens)
+        ghash = hashes.gbdhash_cnf_batch(values, offsets)
+        ihash = hashes.isohash_cnf_batch(values, offsets)
+        feats = cnf_base_features_batch(values, offsets)
+        status = np.where(_null_mask(tokens), "error:TypeError", "ok").astype(object)
+        # the batch's kernel CPU time, apportioned by doc size
+        n_tok = np.diff(offsets).astype(np.float64)
+        if not n_tok.any():
+            n_tok[:] = 1.0  # all docs empty: equal shares
+        runtime = (time.process_time() - t0) * n_tok / max(n_tok.sum(), 1.0)
+    except Exception:
+        ghash, ihash, feats, runtime, status = _extract_per_doc(tokens)
+    bad = status != "ok"
+    ghash[bad] = ihash[bad] = None
+    feats[bad] = np.nan
+    keep = [name for name in batch.schema.names if name != tokens_col]
+    return pa.RecordBatch.from_arrays(
+        [batch.column(name) for name in keep]
+        + [pa.array(ghash, pa.string()), pa.array(ihash, pa.string())]
+        + _feature_arrays(feats)
+        + [pa.array(runtime, pa.float64()), pa.array(status, pa.string())],
+        names=keep + list(EXTRACT_ALL_FIELDS),
+    )
 
 
 def _apply_rebalance(df: DataFrame, rebalance: bool | str) -> DataFrame:
@@ -322,8 +421,17 @@ def _apply_rebalance(df: DataFrame, rebalance: bool | str) -> DataFrame:
 
 def extract_all(df: DataFrame, tokens_col: str = "tokens",
                 rebalance: bool | str = "auto") -> DataFrame:
-    """Fused per-doc extraction: gbdhash + isohash + 58 base features +
-    runtime_s + status in one mapInPandas stage (one Arrow crossing).
+    """Fused per-doc extraction in one ``mapInArrow`` stage (one Arrow
+    crossing per batch, see :func:`_extract_batch`).
+
+    Output: every input column except ``tokens_col`` (the token payload
+    never crosses back to the JVM), then gbdhash, isohash, the 58 base
+    features, ``runtime_s`` and ``status``.  ``runtime_s`` is the batch's
+    kernel CPU time split across its docs by token count (per-doc time
+    when the batch fell back to the per-doc kernels); it is a skew
+    diagnostic, not a value, and stays out of the content hash.  A NULL
+    ``tokens`` row gets ``status='error:TypeError'`` and NULL hashes and
+    features.
 
     ``rebalance="auto"`` (default): a Zipf-heavy ``n_tok`` distribution
     triggers ``partitioning.size_bucketed`` striping so one partition
@@ -332,57 +440,10 @@ def extract_all(df: DataFrame, tokens_col: str = "tokens",
     after a single cheap quantile scan.  Streaming inputs skip the
     probe (no batch quantiles mid-stream)."""
     df = _apply_rebalance(df, rebalance)
-    out_schema = _extract_all_schema(df.schema)
-    n_feat = len(BASE_FEATURES_NAMES)
+    out_schema = _extract_all_schema(df.schema, tokens_col)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.cnf_batch import cnf_base_features_batch
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield _extract_batch(batch, tokens_col)
 
-        for pdf in batches:
-            n = len(pdf)
-            ghash = np.empty(n, dtype=object)
-            ihash = np.empty(n, dtype=object)
-            feats = np.full((n, n_feat), np.nan)
-            runtime = np.zeros(n)
-            status = np.full(n, "ok", dtype=object)
-            arrs: list[np.ndarray] = []
-            for i, t in enumerate(pdf[tokens_col].values):
-                t0 = time.process_time()
-                try:
-                    arr = np.asarray(t, dtype=np.int64)
-                    ghash[i] = hashes.gbdhash_cnf(arr)
-                    ihash[i] = hashes.isohash_cnf(arr)
-                except Exception as e:  # sentinel row, never a task failure
-                    status[i] = f"error:{type(e).__name__}"
-                    arr = np.zeros(0, dtype=np.int64)
-                arrs.append(arr)
-                runtime[i] = time.process_time() - t0
-            # features for the WHOLE batch in segmented numpy ops (2x the
-            # per-doc kernel); per-doc loop only as the error fallback
-            tf0 = time.process_time()
-            try:
-                feats = cnf_base_features_batch(arrs)
-            except Exception:
-                for i, arr in enumerate(arrs):
-                    try:
-                        feats[i] = cnf.cnf_base_features(arr)
-                    except Exception as e:
-                        status[i] = f"error:{type(e).__name__}"
-            t_feat = time.process_time() - tf0
-            # apportion the batch time by doc size (feeds skew diagnostics)
-            tok_n = np.asarray([a.size for a in arrs], dtype=np.float64)
-            total = tok_n.sum()
-            runtime += t_feat * (tok_n / total if total else 1.0 / max(n, 1))
-            bad = status != "ok"
-            if bad.any():
-                feats[bad] = np.nan  # error rows stay NaN, as before
-            out = pdf.copy()
-            out["gbdhash"] = ghash
-            out["isohash"] = ihash
-            for j, name in enumerate(BASE_FEATURES_NAMES):
-                out[name] = feats[:, j]
-            out["runtime_s"] = runtime
-            out["status"] = status
-            yield out
-
-    return df.mapInPandas(run, schema=out_schema)
+    return df.mapInArrow(run, schema=out_schema)

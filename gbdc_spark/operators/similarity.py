@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 __all__ = [
     "cosine_topk",
@@ -119,15 +120,20 @@ def mmr_topk(df: DataFrame, query: list[float], k: int = 5,
 
     Returns (key, mmr_rank 1..k, relevance, mmr_score) in selection
     order; ``mmr_score`` is the unrounded double of the scoring
-    expression over rounded inputs (identical in any IEEE engine).
+    expression over rounded inputs (identical in any IEEE engine).  The
+    key keeps its input type.  A zero-norm vector has no cosine: its
+    relevance is NULL and its penalty NaN, so it is never selected (the
+    result can then hold fewer than ``min(k, pool)`` rows).
     """
+    import math
+
     q = [float(x) for x in query]
     qa = F.array(*[F.lit(x) for x in q])
     v = _to_double(F.col(vec_col))
     rows = (
         df.select(
             F.col(key),
-            cosine_similarity(v, qa).alias("rel"),
+            F.when(_norm(v) > 0, cosine_similarity(v, qa)).alias("rel"),
             v.alias("_v"),
         )
         .orderBy(F.desc("rel"), F.col(key))
@@ -135,13 +141,14 @@ def mmr_topk(df: DataFrame, query: list[float], k: int = 5,
         .collect()
     )
     cands = [
-        (r[key], float(r["rel"]), [float(x) for x in r["_v"]])
+        (r[key], math.nan if r["rel"] is None else float(r["rel"]),
+         [float(x) for x in r["_v"]])
         for r in rows
     ]
     norms = {c[0]: _seq_dot(c[2], c[2]) ** 0.5 for c in cands}
     selected: list[tuple] = []
     chosen: set = set()
-    while len(selected) < min(k, len(cands)):
+    while len(selected) < k:
         best = None
         for ckey, rel, vec in cands:
             if ckey in chosen:
@@ -157,21 +164,27 @@ def mmr_topk(df: DataFrame, query: list[float], k: int = 5,
                     for skey, _, _, _, svec in selected
                 ),
                 default=0.0,
-            )
+            ) if norms[ckey] else math.nan
             score = lam * rel - (1.0 - lam) * pen
+            if math.isnan(score):
+                continue
             if best is None or score > best[0] or (
                 score == best[0] and ckey < best[1]
             ):
                 best = (score, ckey, rel, vec)
+        if best is None:
+            break
         score, ckey, rel, vec = best
         chosen.add(ckey)
         selected.append((ckey, len(selected) + 1, rel, score, vec))
     spark = df.sparkSession
-    out = spark.createDataFrame(
-        [(s[0], s[1], s[2], s[3]) for s in selected],
-        f"{key} long, mmr_rank int, relevance double, mmr_score double",
-    )
-    return out
+    schema = T.StructType([
+        T.StructField(key, df.schema[key].dataType),
+        T.StructField("mmr_rank", T.IntegerType()),
+        T.StructField("relevance", T.DoubleType()),
+        T.StructField("mmr_score", T.DoubleType()),
+    ])
+    return spark.createDataFrame([s[:4] for s in selected], schema)
 
 
 def centroids_from_rows(df: DataFrame, ids: list[int], key: str = "vec_id",

@@ -1,6 +1,6 @@
 """The flagship pipeline (SURVEY.md §4.3):
 
-    scan → fused hash+feature extraction (Arrow/pandas)   [python, vectorized]
+    scan → fused hash+feature extraction (mapInArrow)     [python, vectorized]
          → as-of join vs latest strictly-prior snapshot   [cogrouped merge_asof]
          → lag/ffill windows                              [JVM]
          → gap sessionization per source                  [JVM]
@@ -26,7 +26,7 @@ def feature_pipeline(sequences: DataFrame, snapshots: DataFrame) -> DataFrame:
     (doc_id, snapshot_ts, snapshot_id, prev_score) → feature rows."""
     feats = extract.extract_all(sequences)
     joined = temporal.asof_join(
-        feats.drop("tokens"),  # hashes/features computed; drop the payload early
+        feats,
         snapshots,
         by="doc_id",
         left_ts="ingest_ts",

@@ -28,7 +28,7 @@ __all__ = ["stream_asof", "stream_extract", "stream_sessionize", "run_file_strea
 def stream_extract(stream_df: DataFrame) -> DataFrame:
     """Stateless fused extraction on a stream — identical columns to the
     batch ``extract.extract_all``."""
-    return extract.extract_all(stream_df).drop("tokens")
+    return extract.extract_all(stream_df)
 
 
 def stream_sessionize(

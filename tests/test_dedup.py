@@ -1335,6 +1335,17 @@ def test_clustering_agreement_identical_is_one(spark):
     assert out["ari"] == 1.0 and out["rand_index"] == 1.0
 
 
+def test_clustering_agreement_comb2_exact_above_2_pow_53(spark):
+    from gbdc_spark.operators.dedup import _comb2
+
+    # c*(c-1) = 2^54 + 3*2^27 + 2 > 2^53: a double division rounds it,
+    # the pair counts must stay exact integers
+    c = 2**27 + 2
+    got = spark.createDataFrame([(c,)], "_c long").select(_comb2("_c").alias("p")).first()["p"]
+    assert got == c * (c - 1) // 2
+    assert got != int(float(c * (c - 1)) / 2)
+
+
 def test_clustering_agreement_inner_join_domain(spark):
     from gbdc_spark.operators.dedup import clustering_agreement
 

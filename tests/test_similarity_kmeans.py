@@ -392,6 +392,20 @@ def test_mmr_topk_k_exceeding_pool_returns_pool(spark):
     assert sorted(r["vec_id"] for r in out) == [0, 1, 2]
 
 
+def test_mmr_topk_string_keys_and_zero_vector(spark):
+    from gbdc_spark.operators.similarity import mmr_topk
+
+    rows = [("a", [1.0, 0.0]), ("b", [0.9, 0.1]), ("zero", [0.0, 0.0]),
+            ("c", [0.0, 1.0])]
+    df = spark.createDataFrame(rows, "doc string, embedding array<float>")
+    out = mmr_topk(df, [1.0, 0.2], k=4, pool=4, key="doc")
+    assert out.schema["doc"].dataType.simpleString() == "string"
+    got = out.collect()
+    # the zero-norm vector has no cosine: never selected, never raises
+    assert [r["doc"] for r in got] == ["b", "a", "c"]
+    assert [r["mmr_rank"] for r in got] == [1, 2, 3]
+
+
 def test_mmr_topk_lam_one_equals_relevance_order(spark):
     from gbdc_spark.operators.similarity import cosine_topk, mmr_topk
 

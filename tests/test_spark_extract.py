@@ -53,6 +53,29 @@ def test_extract_all_fused(spark, seqs):
         assert r["runtime_s"] >= 0.0
 
 
+def test_extract_all_plan_is_one_map_in_arrow(spark, seqs):
+    out = extract.extract_all(seqs, rebalance=False)
+    assert "tokens" not in out.columns
+    assert out.columns[: len(seqs.columns) - 1] == [c for c in seqs.columns if c != "tokens"]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1
+    assert "MapInPandas" not in plan
+
+
+def test_single_stages_null_tokens(spark):
+    df = spark.createDataFrame(
+        [("a", [1, -2, 0]), ("b", None), ("c", [])], "doc_id string, tokens array<int>"
+    )
+    out = extract.with_base_features(extract.with_isohash(extract.with_gbdhash(df)))
+    rows = {r["doc_id"]: r for r in out.collect()}
+    assert rows["b"]["gbdhash"] is None and rows["b"]["isohash"] is None
+    assert rows["b"]["features"] is None
+    for k, t in (("a", [1, -2, 0]), ("c", [])):
+        assert rows[k]["gbdhash"] == hashes.gbdhash_cnf(t)
+        assert rows[k]["isohash"] == hashes.isohash_cnf(t)
+        assert rows[k]["features"]["clauses"] == cnf.cnf_base_features(np.asarray(t, dtype=np.int64))[0]
+
+
 def test_sanitize_stage_token_equality(spark, seqs):
     got = {r["doc_id"]: r["tokens"] for r in extract.sanitize(seqs).collect()}
     for idx in range(N):
